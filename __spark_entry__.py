@@ -302,19 +302,19 @@ def q_point_lookup(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    """J9+: kNN via cell-ring expansion, exact top-10 by center distance."""
+    """J9+: exact top-10 by center distance in one ORDER BY ... LIMIT scan."""
     s = _doc_samples(spark, sf_dir).drop("n_docs")
-    r = Q.knn(s, 0.0, 0.0, 10, ring_exponent=4)
+    r = Q.knn(s, 0.0, 0.0, 10)
     return _r6(r.select("cx", "cy", "e", "height", "dist"), "height", "dist")
 
 
 def q_knn_batch(spark, sf_dir):
-    """J9+ batched: k nearest samples for EVERY probe via ring-keyed
-    equi-joins + per-probe top-k windows (set-oriented; driver loop only
-    over radii). Same tie-break as q_knn."""
+    """J9+ batched: k nearest samples for EVERY probe in one plan — the
+    broadcast probes cross the samples and a per-probe top-k window keeps
+    k rows each. Same tie-break as q_knn."""
     s = _doc_samples(spark, sf_dir).drop("n_docs")
     pos = spark.createDataFrame(_PROBES, "pid long, px double, py double")
-    r = Q.knn_join(s, pos, k=10, ring_exponent=4, start_radius=4)
+    r = Q.knn_join(s, pos, k=10)
     return _r6(
         r.select("pid", "cx", "cy", F.col("e").cast("long").alias("e"), "height", "dist"),
         "height", "dist",
@@ -365,13 +365,13 @@ def q_point_lookup_blocks(spark, sf_dir):
 
 
 def q_knn_batch_blocks(spark, sf_dir):
-    """J9+ batched kNN over the BLOCK staging table: ring-keyed join at
-    block granularity, unpacking only matched blocks per round. Same
-    oracle as q_knn_batch."""
+    """J9+ batched kNN over the BLOCK staging table: the blocks unpack
+    in the JVM and feed the same plan as q_knn_batch. Same oracle as
+    q_knn_batch."""
     pos = spark.createDataFrame(_PROBES, "pid long, px double, py double")
     r = knn_join_blocks(
-        _doc_blocks(spark, sf_dir, with_counts=False), pos, k=10, bits=4,
-        layer_types={"height": "double"}, start_radius=4,
+        _doc_blocks(spark, sf_dir, with_counts=False), pos, k=10,
+        layer_types={"height": "double"},
     )
     return _r6(
         r.select("pid", "cx", "cy", F.col("e").cast("long").alias("e"), "height", "dist"),

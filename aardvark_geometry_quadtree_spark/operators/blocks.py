@@ -389,21 +389,28 @@ def _registry_type(n: str) -> str | None:
     return sem.spark_type if sem is not None else None
 
 
-def _explode_cells(
+def unpack_blocks(
     blocks: DataFrame,
-    layers: list[str],
-    int_layers: set[str],
-    vector_specs: dict[str, VectorSpec],
-    layer_types: dict[str, str] | None,
-    carry: list[str],
+    layers: list[str] | None = None,
+    layer_types: dict[str, str] | None = None,
+    vector_specs: dict[str, VectorSpec] | None = None,
 ) -> DataFrame:
-    """Shared cell-unpack plan: JVM ``posexplode`` over zipped scalar
-    arrays, vector layers re-cut from their flat cell-major buffers with
+    """Blocks -> samples rows. JVM-side ``posexplode`` over zipped arrays —
+    no Python; holes come back as canonical NULL; ``layer_types`` casts
+    layers back to their exact source types (store-manifest contract).
+    Vector layers are re-cut from their flat cell-major buffers with
     ``slice`` at the exploded position (per-cell hole test: the intcolor
     mask element, or channel 0's NaN for float kinds — the pack-format
-    contract). ``carry`` columns (e.g. probe context) ride through.
-    Used by :func:`unpack_blocks` and the kNN round unpack — one
-    implementation, so vector layers read correctly on BOTH paths."""
+    contract; registered semantics default to their registry Spark
+    type)."""
+    if layers is None:
+        layers, _ = _block_layers(blocks)
+    if vector_specs is None:
+        vector_specs = resolve_vector_specs(layers)
+    int_layers = {
+        n for n, t in blocks.dtypes
+        if t in _INT_ARRAY_TYPES and n in layers and n not in vector_specs
+    }
     zipped = [F.col("occ")]
     for n in layers:
         if n in vector_specs:
@@ -418,11 +425,10 @@ def _explode_cells(
             if spec.kind == "intcolor":
                 vcarry.append(f"{n}_mask")
     df = blocks.select(
-        *carry, "bx", "by", "e", "w", *vcarry,
+        "bx", "by", "e", "w", *vcarry,
         F.posexplode(F.arrays_zip(*zipped)).alias("pos", "z"),
     ).filter(F.col("z.occ"))
     cols = [
-        *(F.col(c) for c in carry),
         (F.col("bx") * F.col("w") + F.pmod(F.col("pos"), F.col("w"))).cast("long").alias("cx"),
         (F.col("by") * F.col("w") + (F.col("pos") / F.col("w")).cast("int")).cast("long").alias("cy"),
         F.col("e"),
@@ -450,27 +456,6 @@ def _explode_cells(
                 col = col.cast(layer_types[n])
         cols.append(col.alias(n))
     return df.select(*cols)
-
-
-def unpack_blocks(
-    blocks: DataFrame,
-    layers: list[str] | None = None,
-    layer_types: dict[str, str] | None = None,
-    vector_specs: dict[str, VectorSpec] | None = None,
-) -> DataFrame:
-    """Blocks -> samples rows. JVM-side ``posexplode`` over zipped arrays —
-    no Python; holes come back as canonical NULL; ``layer_types`` casts
-    layers back to their exact source types (store-manifest contract).
-    Vector layers are re-cut from their flat cell-major buffers with
-    ``slice`` at the exploded position (registered semantics default to
-    their registry Spark type)."""
-    if layers is None:
-        layers, _ = _block_layers(blocks)
-    if vector_specs is None:
-        vector_specs = resolve_vector_specs(layers)
-    scalar = [n for n in layers if n not in vector_specs]
-    int_layers = {n for n, t in blocks.dtypes if t in _INT_ARRAY_TYPES and n in scalar}
-    return _explode_cells(blocks, layers, int_layers, vector_specs, layer_types, [])
 
 
 def merge_blocks(
@@ -1463,7 +1448,7 @@ def lod_cut_blocks(
 
 
 # ---------------------------------------------------------------------------
-# probe routing over blocks: point lookup / batched kNN without unpacking
+# probe queries over blocks: point lookup without unpacking, batched kNN
 # ---------------------------------------------------------------------------
 
 def sample_positions_blocks(
@@ -1485,7 +1470,8 @@ def sample_positions_blocks(
     (broadcast by default), and the cell's occupancy + layer values are
     read by JVM ``element_at`` at the in-block index — no ``unpack_blocks``
     explode anywhere: a probe batch touches only the block rows it routes
-    to, at one array-index read per layer.
+    to, at one array-index read per layer. With a single exponent each
+    probe hits at most one cell, so no finest-wins window runs.
 
     ``bits`` must be the pack width of ``blocks``. ``layer_types`` casts
     values back to exact source types (store-manifest contract, as in
@@ -1561,6 +1547,8 @@ def sample_positions_blocks(
                 col = col.cast(layer_types[n])
         cols.append(col.alias(n))
     out = hit.select(*cols)
+    if len(exps) == 1:
+        return out  # one cell per probe: nothing for the window to rank
     win = W.partitionBy("pid").orderBy(F.col("e").asc())
     return (
         out.withColumn("_rn", F.row_number().over(win))
@@ -1573,163 +1561,30 @@ def knn_join_blocks(
     blocks: DataFrame,
     positions: DataFrame,
     k: int,
-    bits: int,
-    ring_exponent: int | None = None,
-    max_rings: int = 64,
+    bits: int | None = None,
     layer_types: dict[str, str] | None = None,
-    start_radius: int = 1,
     stage_input: bool = True,
 ) -> DataFrame:
-    """Batched kNN over a BLOCK staging table — ``query.knn_join``
-    semantics (k nearest by cell-center distance per probe, tie-break
-    (dist, cx, cy)) without a standing per-sample table: each ring round
-    equi-joins probe ring cells to whole BLOCKS and unpacks only the
-    matched block rows (JVM posexplode of the round's candidates), so the
-    steady-state block staging feeds the probe path with a pruned scan
-    instead of a full ``unpack_blocks`` of the table.
+    """Batched kNN over a BLOCK staging table: ``query.knn_join`` on the
+    table's cells, with the same output, tie-break (dist, cx, cy) and
+    plan. Every block is unpacked once in the JVM (:func:`unpack_blocks`,
+    so vector layers read correctly), then cross-joined with the broadcast
+    probe frame and cut to k rows per probe by a ``row_number`` window
+    whose partial limit runs before the single shuffle.
 
-    Correctness inherits :func:`~.query.knn_join`'s inscribed-circle
-    guarantee: ``ring_exponent`` is clamped to at least ``max(e) + bits``
-    so every block lies entirely inside ONE ring cell (block world extent
-    divides the ring cell), making "all blocks in the probe's ring" a
-    superset of "all sample centers within radius r*side". Stragglers
-    escalate to geometrically coarser rings exactly like the sample path;
-    the covering round (ring ⊇ the block-extent bbox) is an exact global
-    top-k.
+    Cost model: one scan of ``blocks`` and one posexplode of their occupied
+    cells, plus N x P distance evaluations in codegen (N cells, P probes).
+    The probe batch must be small enough to broadcast; every caller in this
+    repository passes at most 32 probes. Building the result runs no Spark
+    job.
+
+    ``layer_types`` casts layers back to exact source types, as in
+    :func:`unpack_blocks`. ``bits`` and ``stage_input`` are accepted for
+    compatibility and have no effect.
     """
-    from pyspark.sql import Window as W
+    from .query import knn_join
 
-    layers, _ = _block_layers(blocks)
-    vector_specs = resolve_vector_specs(layers)
-    int_l = {
-        n for n, t in blocks.dtypes
-        if t in _INT_ARRAY_TYPES and n in layers and n not in vector_specs
-    }
-    if stage_input:
-        # each ring round re-joins the block table: cut once (callers with
-        # an already-staged table pass stage_input=False)
-        from .. import boundary as _bnd0
-        blocks = _bnd0.cut(blocks)
-    e_max = blocks.agg(F.max("e")).collect()[0][0]
-    if e_max is None:
-        # empty table: k-nearest of nothing is nothing
-        empty = unpack_blocks(blocks, layers, layer_types)
-        return positions.select("pid", "px", "py").limit(0).join(
-            empty.withColumn("dist", F.lit(0.0)), how="cross"
-        )
-    min_re = int(e_max) + bits
-    ring_exponent = min_re if ring_exponent is None else max(int(ring_exponent), min_re)
-    side = 2.0 ** ring_exponent
-
-    cx_center = (F.col("cx").cast("double") + 0.5) * F.pow(F.lit(2.0), F.col("e").cast("double"))
-    cy_center = (F.col("cy").cast("double") + 0.5) * F.pow(F.lit(2.0), F.col("e").cast("double"))
-    dist = F.sqrt(
-        (cx_center - F.col("px")) * (cx_center - F.col("px"))
-        + (cy_center - F.col("py")) * (cy_center - F.col("py"))
-    )
-    w_ord = W.partitionBy("pid").orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy"))
-    sample_cols = ["cx", "cy", "e", *layers]
-    out_cols = ["pid", "px", "py", *sample_cols, "dist"]
-
-    # block -> containing ring cell via the block's world min corner
-    def _keyed_blocks(cur_side: float) -> DataFrame:
-        bside = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
-        return blocks.withColumn(
-            "_rcx", F.floor(F.col("bx").cast("double") * bside / F.lit(cur_side)).cast("long")
-        ).withColumn(
-            "_rcy", F.floor(F.col("by").cast("double") * bside / F.lit(cur_side)).cast("long")
-        )
-
-    def _round(unresolved, cur_side: float, r: int, covering: bool):
-        u = unresolved.select(
-            "pid", "px", "py",
-            F.floor(F.col("px") / F.lit(cur_side)).cast("long").alias("_pcx"),
-            F.floor(F.col("py") / F.lit(cur_side)).cast("long").alias("_pcy"),
-        )
-        ring = u.select(
-            "*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dx")
-        ).select("*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dy"))
-        kb = _keyed_blocks(cur_side)
-        matched = ring.join(
-            kb,
-            (kb["_rcx"] == ring["_pcx"] + ring["_dx"])
-            & (kb["_rcy"] == ring["_pcy"] + ring["_dy"]),
-            "inner",
-        ).drop("_pcx", "_pcy", "_dx", "_dy", "_rcx", "_rcy")
-        # unpack ONLY the matched blocks: JVM posexplode over this round's
-        # candidates (probe context carried through) — the shared
-        # _explode_cells plan, so vector layers read correctly here too
-        cand = _explode_cells(
-            matched, layers, int_l, vector_specs, layer_types,
-            carry=["pid", "px", "py"],
-        ).withColumn("dist", dist)
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w_ord))
-            .filter(F.col("_rn") <= k)
-            .withColumn("_kth", F.max("dist").over(W.partitionBy("pid")))
-            .withColumn("_nc", F.count("*").over(W.partitionBy("pid")))
-        )
-        # plan cut between rounds (same contract as query.knn_join)
-        from .. import boundary as _bnd
-        topk = _bnd.cut(topk)
-        if covering:
-            return topk
-        return topk.filter(
-            (F.col("_nc") >= k) & (F.col("_kth") <= F.lit(float(r) * cur_side))
-        )
-
-    unresolved = positions.select("pid", "px", "py")
-    resolved_parts = []
-    r = max(1, int(start_radius))
-    r_last = 0  # largest base radius actually certified (0 = none ran)
-    while r <= max_rings:
-        done = _round(unresolved, side, r, covering=False)
-        resolved_parts.append(done.select(*out_cols))
-        unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-        r_last = r
-        if unresolved.limit(1).count() == 0:
-            unresolved = None
-            break
-        r *= 2
-    if unresolved is not None:
-        bside = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
-        bbox = blocks.agg(
-            F.min(F.col("bx").cast("double") * bside).alias("x0"),
-            F.max((F.col("bx").cast("double") + 1) * bside).alias("x1"),
-            F.min(F.col("by").cast("double") * bside).alias("y0"),
-            F.max((F.col("by").cast("double") + 1) * bside).alias("y1"),
-        ).collect()[0]
-        needed = unresolved.agg(
-            F.max(
-                F.greatest(
-                    F.abs(F.col("px") - F.lit(float(bbox["x0"]))),
-                    F.abs(F.col("px") - F.lit(float(bbox["x1"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y0"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y1"]))),
-                )
-            )
-        ).collect()[0][0]
-        # the base loop certified no resolution within r_last * side, so any
-        # escalated round with r2*side2 <= that radius is a provable no-op
-        # (each one a join + count job): start at the first geometrically
-        # coarser ring that actually extends the certified radius
-        r2, side2 = 2, side * 2.0
-        while r2 * side2 <= float(r_last) * side:
-            side2 *= 2.0
-        while True:
-            covering = (r2 * side2) >= float(needed)
-            done = _round(unresolved, side2, r2, covering=covering)
-            resolved_parts.append(done.select(*out_cols))
-            if covering:
-                break
-            unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-            if unresolved.limit(1).count() == 0:
-                break
-            side2 *= 2.0
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return knn_join(unpack_blocks(blocks, layer_types=layer_types), positions, k)
 
 
 # ---------------------------------------------------------------------------

@@ -433,7 +433,9 @@ def sample_positions(
     (Query.fs:674-685) — hash partitioning by computed cell key does the same
     in one shuffle. At merge nodes it keeps the *more detailed* result
     (Query.fs:689-739); with merges resolved at build time, that reduces to
-    "finest exponent wins" per position, a ranking window.
+    "finest exponent wins" per position, a ranking window. With a single
+    exponent each probe hits at most one cell, so the join is returned
+    as is, without the window and its shuffle.
 
     positions: DataFrame (pid, px, py). ``broadcast_positions=True`` (the
     default) hints the candidate side broadcast — right when the point set
@@ -462,55 +464,33 @@ def sample_positions(
     if broadcast_positions:
         cand = F.broadcast(cand)
     hit = samples.join(cand, ["cx", "cy", "e"], "inner")
+    if len(exps) == 1:
+        return hit  # one cell per probe: nothing for the window to rank
     w = W.partitionBy("pid").orderBy(F.col("e").asc())
     return hit.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 # ---------------------------------------------------------------------------
-# kNN via cell-ring expansion (north-star extension built on J9)
+# kNN by center distance (north-star extension built on J9)
 # ---------------------------------------------------------------------------
 
-def knn(
-    samples: DataFrame,
-    px: float,
-    py: float,
-    k: int,
-    ring_exponent: int | None = None,
-    max_rings: int = 64,
-) -> DataFrame:
-    """k nearest samples to (px, py) by Euclidean distance on sample centers.
-
-    Cell-ring expansion: probe growing Chebyshev rings of cells at
-    ``ring_exponent`` until >= k candidates are found AND the k-th candidate's
-    distance is covered by the searched radius (correctness guarantee), then
-    exact top-k. Each round is one pruned range scan — no full-table sort.
-    """
-    if ring_exponent is None:
-        ring_exponent = samples.agg(F.max("e")).collect()[0][0]
-    side = 2.0 ** ring_exponent
-    ccx, ccy = int(px // side), int(py // side)
-
+def _center_dist(px, py):
+    """Distance from a sample's cell center to the point (px, py)."""
     qx = C.sample_pos(F.col("cx"), F.col("e"), 0.5)
     qy = C.sample_pos(F.col("cy"), F.col("e"), 0.5)
-    dist = F.sqrt(
-        (qx - F.lit(float(px))) * (qx - F.lit(float(px)))
-        + (qy - F.lit(float(py))) * (qy - F.lit(float(py)))
-    )
+    return F.sqrt((qx - px) * (qx - px) + (qy - py) * (qy - py))
 
-    r = 1
-    while r <= max_rings:
-        # box of cells within Chebyshev radius r at ring_exponent
-        lo_x, hi_x = (ccx - r) * side, (ccx + r + 1) * side
-        lo_y, hi_y = (ccy - r) * side, (ccy + r + 1) * side
-        cand = inside_box(samples, lo_x, lo_y, hi_x, hi_y).withColumn("dist", dist)
-        top = cand.orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy")).limit(k)
-        rows = top.collect()
-        # guarantee: the k-th distance must fit inside the searched square's
-        # inscribed circle, else a closer sample could sit just outside
-        guaranteed = r * side
-        if len(rows) >= k and rows[-1]["dist"] <= guaranteed:
-            return top
-        r *= 2
+
+def knn(samples: DataFrame, px: float, py: float, k: int) -> DataFrame:
+    """k nearest samples to (px, py) by Euclidean distance on sample centers,
+    ties broken by (dist, cx, cy).
+
+    One scan: ``ORDER BY dist, cx, cy LIMIT k`` plans as
+    TakeOrderedAndProject, a per-partition top-k and one merge of those —
+    one job, no full sort, no shuffle of the table. Returns
+    (cx, cy, e, <layers...>, dist).
+    """
+    dist = _center_dist(F.lit(float(px)), F.lit(float(py)))
     return samples.withColumn("dist", dist).orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy")).limit(k)
 
 
@@ -519,161 +499,36 @@ def knn_join(
     positions: DataFrame,
     k: int,
     ring_exponent: int | None = None,
-    max_rings: int = 64,
-    start_radius: int = 1,
     stage_input: bool = True,
 ) -> DataFrame:
     """BATCHED kNN: the k nearest samples (by center distance) for EVERY
-    probe in ``positions`` (pid, px, py) — the training-pipeline shape
-    ("nearest samples for each of 10^9 probes"), resolved in set-oriented
-    joins instead of :func:`knn`'s one-point driver loop.
+    probe in ``positions`` (pid, px, py), ties broken by (dist, cx, cy) as
+    in :func:`knn`. Exact by construction, with no Python-side loop: building
+    the result runs no Spark job.
 
-    The reference's batch lookup routes each position down the tree by
-    quadrant (Query.fs:645-793); distributed, that inverts into ring-keyed
-    equi-joins: every sample is keyed by the ring cell CONTAINING ITS
-    CENTER at ``ring_exponent`` (center-keying is exact for center
-    distance), probes explode to their Chebyshev-radius-r ring of cells,
-    and one equi-join + per-probe top-k window scores the round. Probes
-    whose k-th distance fits inside the searched radius (``dist_k <=
-    r * side`` — the same inscribed-circle guarantee as :func:`knn`) are
-    done; the rest re-enter with doubled radius. The driver loop is over
-    RADII (<= log2(max_rings) rounds, one count per round) — never over
-    probes. Stragglers past ``max_rings`` (probes in empty regions)
-    escalate to geometrically COARSER ring cells at a fixed small cell
-    radius — every escalated round is still a ring-keyed equi-join (never
-    a cross join), and the loop provably terminates at the first round
-    whose ring square covers the whole data bounding box for every
-    remaining probe: that covering round IS the exact global top-k for the
-    stragglers (it also handles a table with fewer than k samples). A
-    probe set concentrated in empty space therefore costs
-    O(log(distance)) pruned joins, not a cartesian scan per probe.
+    Plan: the probe frame is broadcast and cross-joined with the samples
+    (a probe-side-broadcast ``BroadcastNestedLoopJoin``), and
+    ``row_number() over (partition by pid order by dist, cx, cy) <= k``
+    keeps the top k. Spark plans that filter as a ``WindowGroupLimit``
+    Partial before the single ``Exchange``, so each task shuffles at most
+    k rows per probe.
 
-    Returns (pid, px, py, cx, cy, e, <layers...>, dist), exactly k rows per
-    probe (fewer iff the whole table has < k samples); tie-break
-    (dist, cx, cy) matches :func:`knn` — parity-tested per probe.
+    Cost model: one scan of ``samples`` plus N x P distance evaluations in
+    whole-stage codegen (N samples, P probes), and one shuffle of at most
+    k x P rows per task. Broadcast contract: the probe batch must be small
+    enough to broadcast, and the scan cost grows with it; every caller in
+    this repository passes at most 32 probes.
+
+    ``ring_exponent`` and ``stage_input`` are accepted for compatibility
+    and have no effect.
+
+    Returns (pid, px, py, cx, cy, e, <layers...>, dist): k rows per probe,
+    or every sample when the table holds fewer than k.
     """
-    from .. import boundary as _bnd
-
-    if ring_exponent is None:
-        ring_exponent = samples.agg(F.max("e")).collect()[0][0]
-    side = 2.0 ** ring_exponent
-
-    # the samples frame is consumed once per ring round (plus the bbox agg):
-    # cut it once so each round joins a materialized/staged frame instead of
-    # recomputing the upstream lineage per round. Callers passing an
-    # already-staged table can set stage_input=False to skip the copy.
-    if stage_input:
-        samples = _bnd.cut(samples)
-
-    cx_center = C.sample_pos(F.col("cx"), F.col("e"), 0.5)
-    cy_center = C.sample_pos(F.col("cy"), F.col("e"), 0.5)
-
-    dist = F.sqrt(
-        (cx_center - F.col("px")) * (cx_center - F.col("px"))
-        + (cy_center - F.col("py")) * (cy_center - F.col("py"))
+    probes = F.broadcast(positions.select("pid", "px", "py"))
+    cand = samples.crossJoin(probes).select(
+        "pid", "px", "py", *samples.columns,
+        _center_dist(F.col("px"), F.col("py")).alias("dist"),
     )
     w = W.partitionBy("pid").orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy"))
-    out_cols = ["pid", "px", "py", *[c for c in samples.columns], "dist"]
-
-    def _round(unresolved, cur_side: float, r: int, covering: bool):
-        """One ring-keyed equi-join round at cell size ``cur_side``, cell
-        radius ``r``. The probe's ring covers the Chebyshev ball of radius
-        ``r * cur_side`` around it, so ``dist_k <= r * cur_side`` certifies
-        the top-k; ``covering=True`` means the ring contains the whole data
-        bbox and every remaining probe resolves unconditionally."""
-        s = samples.withColumn(
-            "_rcx", F.floor(cx_center / F.lit(cur_side)).cast("long")
-        ).withColumn("_rcy", F.floor(cy_center / F.lit(cur_side)).cast("long"))
-        u = unresolved.select(
-            "pid", "px", "py",
-            F.floor(F.col("px") / F.lit(cur_side)).cast("long").alias("_pcx"),
-            F.floor(F.col("py") / F.lit(cur_side)).cast("long").alias("_pcy"),
-        )
-        ring = u.select(
-            "*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dx")
-        ).select("*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dy"))
-        cand = ring.join(
-            s,
-            (s["_rcx"] == ring["_pcx"] + ring["_dx"])
-            & (s["_rcy"] == ring["_pcy"] + ring["_dy"]),
-            "inner",
-        ).withColumn("dist", dist)
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .withColumn("_kth", F.max("dist").over(W.partitionBy("pid")))
-            .withColumn("_nc", F.count("*").over(W.partitionBy("pid")))
-        )
-        # plan cut: each round's result feeds BOTH the output accumulation
-        # and the next round's anti-join (see boundary.py for the contract)
-        topk = _bnd.cut(topk)
-        if covering:
-            return topk
-        return topk.filter(
-            (F.col("_nc") >= k) & (F.col("_kth") <= F.lit(float(r) * cur_side))
-        )
-
-    unresolved = positions.select("pid", "px", "py")
-    resolved_parts: list[DataFrame] = []
-    # start_radius skips the small early rounds when the caller knows the
-    # local density is low (each round costs a join + a count job; the
-    # result is radius-schedule independent, only round count changes)
-    r = max(1, int(start_radius))
-    r_last = 0  # largest base radius actually certified (0 = none ran)
-    while r <= max_rings:
-        done = _round(unresolved, side, r, covering=False)
-        resolved_parts.append(done.select(*out_cols))
-        unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-        r_last = r
-        if unresolved.limit(1).count() == 0:
-            unresolved = None
-            break
-        r *= 2
-    if unresolved is not None:
-        # straggler escalation: coarser cells, fixed small cell radius —
-        # world radius doubles per round at O(25) ring cells per probe.
-        # Terminates at the covering round: ring ⊇ data bbox for every
-        # remaining probe ⇒ the round's candidates are ALL samples' cells,
-        # i.e. an exact global top-k (also correct when the table holds
-        # fewer than k samples).
-        bbox = samples.agg(
-            F.min(cx_center).alias("x0"), F.max(cx_center).alias("x1"),
-            F.min(cy_center).alias("y0"), F.max(cy_center).alias("y1"),
-        ).collect()[0]
-        if bbox["x0"] is None:
-            out = resolved_parts[0]
-            for p in resolved_parts[1:]:
-                out = out.unionByName(p)
-            return out  # empty table: base rounds already produced nothing
-        # farthest remaining probe's Chebyshev distance to the bbox
-        needed = unresolved.agg(
-            F.max(
-                F.greatest(
-                    F.abs(F.col("px") - F.lit(float(bbox["x0"]))),
-                    F.abs(F.col("px") - F.lit(float(bbox["x1"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y0"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y1"]))),
-                )
-            )
-        ).collect()[0][0]
-        # the base loop certified no resolution within r_last * side, so
-        # escalated rounds with r2*side2 <= that radius are provable no-ops
-        # (each a join + count job): start at the first coarser ring that
-        # extends the certified radius
-        r2, side2 = 2, side * 2.0
-        while r2 * side2 <= float(r_last) * side:
-            side2 *= 2.0
-        while True:
-            covering = (r2 * side2) >= float(needed)
-            done = _round(unresolved, side2, r2, covering=covering)
-            resolved_parts.append(done.select(*out_cols))
-            if covering:
-                break
-            unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-            if unresolved.limit(1).count() == 0:
-                break
-            side2 *= 2.0
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")

@@ -71,14 +71,15 @@ def _scored_arrow(
     qn = np.array(query_vec, dtype=np.float64)
     dim = len(query_vec)
     n_planes = len(planes)
-    out_schema = f"{id_col} long, bucket long, dotq double, normsq double"
+    id_type = dict(embeddings.dtypes)[id_col]
+    out_schema = f"{id_col} {id_type}, bucket long, dotq double, normsq double"
 
     def _score(batches):
         for b in batches:
             t = pa.Table.from_batches([b])
             if t.num_rows == 0:
                 continue
-            ids = t[id_col].to_numpy()
+            ids = b.column(id_col)
             lst = t.column(vec_col)
             arr = lst.combine_chunks() if isinstance(lst, pa.ChunkedArray) else lst
             flat = arr.flatten().to_numpy().astype(np.float64, copy=False)
@@ -97,7 +98,7 @@ def _scored_arrow(
             for p in range(n_planes):
                 bucket |= (dps[p] >= 0).astype(np.int64) << p
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(bucket), pa.array(dq), pa.array(ns)],
+                [ids, pa.array(bucket), pa.array(dq), pa.array(ns)],
                 names=[id_col, "bucket", "dotq", "normsq"],
             )
 

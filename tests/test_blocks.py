@@ -281,32 +281,30 @@ def test_sample_positions_blocks_parity(spark):
     assert key(got) == key(exp)
 
 
-def test_knn_join_blocks_parity(spark):
-    """Batched kNN over blocks == knn_join over samples, including a
-    straggler probe in empty space (escalation path)."""
-    from aardvark_geometry_quadtree_spark.operators.query import knn_join
+def test_single_exponent_lookup_has_no_window(spark):
+    """With one exponent each probe hits at most one cell: both lookup
+    paths return the join with no Window, and the same rows as the
+    windowed plan of a two-exponent call whose second level is empty."""
+    from aardvark_geometry_quadtree_spark.operators.query import sample_positions
 
-    s = _mk(spark, 61)
-    pos = spark.createDataFrame(
-        [(0, 0.0, 0.0), (1, 15.5, -12.5), (2, 4000.0, 4000.0)],
-        "pid long, px double, py double",
-    )
-    exp = knn_join(s, pos, k=5, ring_exponent=3, max_rings=4)
+    s = _mk(spark, 53)
     blk = B.pack_blocks(s, bits=3)
-    got = B.knn_join_blocks(
-        blk, pos, k=5, bits=3, ring_exponent=3, max_rings=4,
-        layer_types={"height": "double", "n": "bigint"},
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-    def key(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["pid"], []).append(
-                (round(r["dist"], 9), r["cx"], r["cy"], r["height"], r["n"])
-            )
-        return {k: sorted(v) for k, v in out.items()}
-    assert key(got) == key(exp)
+    hits = [(i, r["cx"] + 0.25, r["cy"] + 0.75) for i, r in enumerate(s.limit(3).collect())]
+    pos = spark.createDataFrame(hits + [(3, 1000.0, 1000.0)], "pid long, px double, py double")
+    lt = {"height": "double", "n": "bigint"}
+    cases = [
+        (sample_positions(s, pos, exponents=[0]), sample_positions(s, pos, exponents=[0, 9])),
+        (
+            B.sample_positions_blocks(blk, pos, bits=3, exponents=[0], layer_types=lt),
+            B.sample_positions_blocks(blk, pos, bits=3, exponents=[0, 9], layer_types=lt),
+        ),
+    ]
+    for one, two in cases:
+        assert "Window" not in one._jdf.queryExecution().executedPlan().toString()
+        assert "Window" in two._jdf.queryExecution().executedPlan().toString()
+        assert one.columns == two.columns
+        got = sorted(one.collect(), key=lambda r: r["pid"])
+        assert got == sorted(two.collect(), key=lambda r: r["pid"]) and len(got) == 3
 
 
 def _mk_vec(spark, seed, n=64, grid=8):
@@ -470,29 +468,33 @@ def test_vector_layers_point_lookup_blocks(spark):
 
 
 def test_vector_layers_knn_blocks(spark):
-    """Batched kNN over blocks carries vector layers correctly through the
-    shared _explode_cells round unpack — parity with knn_join."""
-    from aardvark_geometry_quadtree_spark.operators.query import knn_join
+    """Batched kNN over blocks carries VECTOR layers through the shared
+    unpack: each neighbour's normals and colors equal the source cell's,
+    and the neighbours are a numpy brute force's (tie-break dist, cx, cy)."""
+    import numpy as np
 
     s = _mk_vec(spark, 4)
-    pos = spark.createDataFrame(
-        [(0, 1.0, 1.0), (1, 200.0, 200.0)], "pid long, px double, py double"
-    )
-    exp = knn_join(s, pos, k=3, ring_exponent=3, max_rings=4)
-    got = B.knn_join_blocks(B.pack_blocks(s, bits=2), pos, k=3, bits=2,
-                            ring_exponent=3, max_rings=4)
+    probes = [(0, 1.0, 1.0), (1, 200.0, 200.0), (2, -3.0, 4.5)]
+    pos = spark.createDataFrame(probes, "pid long, px double, py double")
+    got = B.knn_join_blocks(B.pack_blocks(s, bits=2), pos, k=3)
 
-    def key(df):
-        out = {}
-        for r in df.collect():
-            nrm = None if r["Normals3f"] is None else tuple(round(float(x), 4) for x in r["Normals3f"])
-            col = None if r["Colors4b"] is None else tuple(int(x) for x in r["Colors4b"])
-            out.setdefault(r["pid"], []).append(
-                (round(r["dist"], 9), r["cx"], r["cy"], nrm, col)
-            )
-        return {k: sorted(v, key=str) for k, v in out.items()}
+    src = _vcells(s)
+    keys = sorted(src)
+    cx = np.array([c[0] for c in keys])
+    cy = np.array([c[1] for c in keys])
+    want = {}
+    for pid, px, py in probes:
+        d = np.sqrt((cx + 0.5 - px) ** 2 + (cy + 0.5 - py) ** 2)
+        want[pid] = [(round(float(d[i]), 9), keys[i], src[keys[i]]) for i in np.lexsort((cy, cx, d))[:3]]
 
-    assert key(got) == key(exp)
+    out = {}
+    for r in got.collect():
+        nrm = None if r["Normals3f"] is None else tuple(round(float(x), 4) for x in r["Normals3f"])
+        col = None if r["Colors4b"] is None else tuple(int(x) for x in r["Colors4b"])
+        out.setdefault(r["pid"], []).append(
+            (round(r["dist"], 9), (r["cx"], r["cy"], r["e"]), (nrm, col))
+        )
+    assert {p: sorted(v, key=lambda t: (t[0], t[1])) for p, v in out.items()} == want
 
 
 def test_pack_float_vector_channel0_nan_is_hole(spark):
@@ -696,3 +698,29 @@ def test_r6_advice_guards(spark):
 
     with _pytest.raises(ValueError, match="zero-length direction"):
         near_line_blocks(wide, 0.0, 0.0, 0.0, 0.0, 1.0)
+
+
+@pytest.mark.parametrize("with_counts", [True, False])
+def test_doc_blocks_equals_pack_of_doc_samples(spark, tmp_path, with_counts):
+    """``__spark_entry__``'s one-shuffle block staging ``_doc_blocks`` is exactly
+    ``pack_blocks(_doc_samples)``: no row of either is missing from the
+    other (exceptAll both ways), for the whole table and one source."""
+    import __spark_entry__ as E
+
+    docs = spark.range(2500).select(
+        F.col("id").alias("doc_id"),
+        ((F.col("id") * 37) % 211 + 1).alias("n_chars"),
+        F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("source"),
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    for source in (None, "src1"):
+        samples = E._doc_samples(spark, str(tmp_path), source)
+        if not with_counts:
+            samples = samples.drop("n_docs")
+        want = B.pack_blocks(samples, bits=4)
+        got = E._doc_blocks(spark, str(tmp_path), source, with_counts=with_counts)
+        assert sorted(got.columns) == sorted(want.columns)
+        got = got.select(*want.columns)
+        assert want.count() > 1
+        assert got.exceptAll(want).count() == 0, source
+        assert want.exceptAll(got).count() == 0, source

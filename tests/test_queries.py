@@ -200,56 +200,26 @@ def test_inside_box_pushdown_parity_and_scan_filters(q10x7, spark, tmp_path):
     assert "GreaterThanOrEqual(cx" in plan or "ThanOrEqual(cx" in plan
 
 
-def test_knn_join_matches_per_point_knn(spark, q10x7):
-    """Batched ring-join kNN == the per-point driver-loop kNN for every
-    probe, including a far probe that needs ring doubling and one beyond
-    max_rings (broadcast-sweep path)."""
-    probes = [(0, 0.0, 0.0), (1, 9.5, 6.5), (2, 4.2, 3.7), (3, 200.0, 200.0)]
-    pos = spark.createDataFrame(probes, "pid long, px double, py double")
-    batched = Q.knn_join(q10x7, pos, k=3, ring_exponent=0, max_rings=8)
-    # the straggler path must stay ring-keyed: no cartesian / nested-loop
-    # join anywhere in the plan even with a probe far past max_rings
-    plan = batched._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-    got = {}
-    for r in batched.collect():
-        got.setdefault(r["pid"], []).append((round(r["dist"], 9), r["cx"], r["cy"]))
-    for pid, px, py in probes:
-        exp = [
-            (round(r["dist"], 9), r["cx"], r["cy"])
-            for r in Q.knn(q10x7, px, py, 3, ring_exponent=0, max_rings=8).collect()
-        ]
-        assert sorted(got[pid]) == sorted(exp), pid
-        assert len(got[pid]) == 3
-
-
 def test_knn_join_all_empty_region_probes(spark, q10x7):
-    """Every probe concentrated in empty space (all stragglers): the
-    escalation path must complete with ring-keyed joins only and still
-    return the exact global top-k per probe."""
+    """Every probe far out in empty space: the batched window plan and the
+    per-point ORDER BY ... LIMIT plan return the same global top-k."""
     probes = [(0, 5000.0, 5000.0), (1, -3000.0, 4000.0), (2, 10000.0, -2.0)]
     pos = spark.createDataFrame(probes, "pid long, px double, py double")
-    batched = Q.knn_join(q10x7, pos, k=3, ring_exponent=0, max_rings=4)
-    plan = batched._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
+    batched = Q.knn_join(q10x7, pos, k=3)
     got = {}
     for r in batched.collect():
         got.setdefault(r["pid"], []).append((round(r["dist"], 9), r["cx"], r["cy"]))
     for pid, px, py in probes:
-        exp = [
-            (round(r["dist"], 9), r["cx"], r["cy"])
-            for r in Q.knn(q10x7, px, py, 3, ring_exponent=0).collect()
-        ]
+        exp = [(round(r["dist"], 9), r["cx"], r["cy"]) for r in Q.knn(q10x7, px, py, 3).collect()]
         assert sorted(got[pid]) == sorted(exp), pid
 
 
 def test_knn_join_table_smaller_than_k(spark):
-    """Fewer than k samples in the whole table: the covering round emits
-    every sample per probe instead of looping forever."""
+    """Fewer than k samples in the whole table: every sample, once per probe."""
     s = spark.createDataFrame(
         [(0, 0, 0, 1.0), (5, 5, 0, 2.0)], "cx long, cy long, e int, height double"
     )
     pos = spark.createDataFrame([(0, 100.0, 100.0)], "pid long, px double, py double")
-    rows = Q.knn_join(s, pos, k=5, ring_exponent=0, max_rings=2).collect()
+    rows = Q.knn_join(s, pos, k=5).collect()
     assert len(rows) == 2
     assert {(r["cx"], r["cy"]) for r in rows} == {(0, 0), (5, 5)}

@@ -103,6 +103,22 @@ def test_ann_matches_brute_force_top1(spark):
     assert ann["sim"] == bf["sim"] == 1.0
 
 
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_topk_keeps_non_bigint_id_type(spark, id_type):
+    """The scoring kernel's id column takes the input's type: int and
+    string ids come back unchanged through both top-k paths."""
+    conv = int if id_type == "int" else (lambda i: f"v{i:02d}")
+    rows = [(conv(i), [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, f"vec_id {id_type}, embedding array<float>")
+    q = rows[3][1]
+    bf = S.brute_force_topk(emb, q, k=3)
+    ann = S.ann_topk(emb, q, k=3, n_planes=4)
+    for df in (bf, ann):
+        assert dict(df.dtypes)["vec_id"] == id_type
+        top = df.collect()
+        assert top[0]["vec_id"] == conv(3) and top[0]["sim"] == 1.0
+
+
 def test_embedding_dup_pairs(spark):
     rows = [(0, [1.0, 0.0, 0.0]), (1, [0.999, 0.01, 0.0]), (2, [0.0, 1.0, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
